@@ -168,6 +168,21 @@ class Snapshot:
             self._keys_cache = k
         return k
 
+    def _arities(self) -> frozenset:
+        """Lengths of the stored bounds (lazy, carried across overlays as
+        a superset). The bisect window is exact only while every stored
+        bound has ONE arity: a short (prefix) bound left by a prefix
+        delete sorts before the longer bounds it prefixes, so stops stop
+        ascending and the window's walk-back can miss an intersecting
+        segment."""
+        a = getattr(self, "_arity_cache", None)
+        if a is None:
+            a = frozenset(
+                len(b) for s in self.segments for b in (s.start, s.stop)
+            )
+            self._arity_cache = a
+        return a
+
     # -- overlay (the core write-path semantics) ---------------------------
 
     def overlay(
@@ -217,8 +232,9 @@ class Snapshot:
             lo = hi = bisect_right(keys, _skey(new), llo, lhi)
             pieces = [new]
         else:
-            if overlapping:
-                # label may hold overlapping segments (KV) — stops are
+            if overlapping or len(self._arities()) > 1:
+                # label may hold overlapping segments (KV), or mixed-arity
+                # bounds (after a prefix delete) — either way stops are
                 # not ascending, so the window is the whole label block;
                 # the piece loop's intersects test sorts members out
                 lo, hi = llo, lhi
@@ -283,6 +299,9 @@ class Snapshot:
         out_segments = segments[:lo] + pieces + segments[hi:]
         out = Snapshot(out_segments, max_seq=seq, _presorted=True)
         out._keys_cache = keys[:lo] + [_skey(p) for p in pieces] + keys[hi:]
+        out._arity_cache = self._arities() | {
+            len(b) for p in pieces for b in (p.start, p.stop)
+        }
         return out
 
     # -- queries over the table -------------------------------------------

@@ -135,12 +135,6 @@ def _resolve_backend(series, rels):
     )
 
 
-def _lit(v, tz_aware=True):
-    if isinstance(v, _dt.datetime) and tz_aware and v.tzinfo is None:
-        return v.replace(tzinfo=_dt.timezone.utc)
-    return v
-
-
 class LakotaDataSource(DataSource):
     """See module docstring. Options: ``path``, ``table``
     ('collection/series'), ``before`` (batch time travel), and
@@ -182,12 +176,15 @@ class _Scanner:
     def scan(self, part: InputPartition) -> Iterator:
         import posixpath
 
-        import pyarrow as pa
-        import pyarrow.parquet as pq
         from pyarrow import fs as pafs
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        from lakota_spark.series import _arrow_mask_expr, _pa_bound_mask
+        from lakota_spark.series import (
+            _arrow_mask_expr,
+            _index_filter,
+            _pa_bound_mask,
+            _scan_segment_files,
+        )
 
         meta = part.value
         if not meta["files"]:
@@ -196,59 +193,36 @@ class _Scanner:
         target = to_arrow_schema(self.struct)
         plan = meta.get("plan")
         mask_expr = _arrow_mask_expr(plan) if plan is not None else None
-        # the `_read_run_local` lesson: per-file pq.read_table calls are
-        # GIL-bound python overhead on fragmented snapshots — UNCLIPPED
-        # files (no per-segment bounds, the common case) read as ONE
-        # C++ dataset scan; clipped files keep per-file bound masks
-        plain = [rel for rel, b in meta["files"] if b is None]
-        clipped = [(rel, b) for rel, b in meta["files"] if b is not None]
-        if len(plain) > 4:
-            import pyarrow.dataset as pads
-
-            ds = pads.dataset(
-                [posixpath.join(root, rel) for rel in plain],
-                format="parquet",
-                filesystem=fsys,
+        # UNCLIPPED files (no per-segment bounds, the common case) read
+        # as ONE scan; each clipped file is its own scan, pruned by and
+        # then exactly masked to its effective bounds
+        plain = [
+            posixpath.join(root, rel) for rel, b in meta["files"] if b is None
+        ]
+        if plain:
+            tbl = _scan_segment_files(
+                fsys, plain, target, target.names, mask_expr
             )
-            try:
-                tbl = ds.to_table(filter=mask_expr)
-            except (pa.ArrowInvalid, pa.ArrowNotImplementedError):
-                if mask_expr is None:
-                    raise
-                tbl = ds.to_table()
-            tbl = tbl.select(target.names).cast(target)
-            if mask_expr is not None:
-                tbl = tbl.filter(mask_expr)
             if tbl.num_rows:
                 yield from tbl.to_batches()
-            files = clipped
-        else:
-            files = [(rel, None) for rel in plain] + clipped
-        for rel, bounds in files:
-            full = posixpath.join(root, rel)
-            try:
-                tbl = pq.read_table(
-                    full, filesystem=fsys, filters=mask_expr
-                )
-            except (pa.ArrowInvalid, pa.ArrowNotImplementedError):
-                if mask_expr is None:
-                    raise
-                tbl = pq.read_table(full, filesystem=fsys)
-            tbl = tbl.select(target.names).cast(target)
-            if bounds is not None:
-                start_b, stop_b, s_cl, e_cl = bounds
-                if start_b is not None:
-                    tbl = tbl.filter(
-                        _pa_bound_mask(tbl, self.idx, start_b, s_cl, True)
-                    )
-                if stop_b is not None:
-                    tbl = tbl.filter(
-                        _pa_bound_mask(tbl, self.idx, stop_b, e_cl, False)
-                    )
+        for rel, bounds in meta["files"]:
+            if bounds is None:
+                continue
+            start_b, stop_b, s_cl, e_cl = bounds
+            expr = _index_filter(self.idx, start_b, s_cl, stop_b, e_cl)
             if mask_expr is not None:
-                # authoritative post-cast filter (read-time pushdown may
-                # have retried unfiltered on physical-type mismatch)
-                tbl = tbl.filter(mask_expr)
+                expr = mask_expr if expr is None else expr & mask_expr
+            tbl = _scan_segment_files(
+                fsys, [posixpath.join(root, rel)], target, target.names, expr
+            )
+            if start_b is not None:
+                tbl = tbl.filter(
+                    _pa_bound_mask(tbl, self.idx, start_b, s_cl, True)
+                )
+            if stop_b is not None:
+                tbl = tbl.filter(
+                    _pa_bound_mask(tbl, self.idx, stop_b, e_cl, False)
+                )
             if tbl.num_rows:
                 yield from tbl.to_batches()
 
@@ -315,14 +289,11 @@ class LakotaBatchReader(DataSourceReader):
     # -- pushdown ----------------------------------------------------------
 
     def pushFilters(self, filters):  # noqa: N802 (API naming)
-        from pyspark.sql.types import TimestampType
+        from lakota_spark.series import _arrow_mask_expr, _utc
 
-        ts_cols = {
-            f.name
-            for f in self._series.schema.struct_type().fields
-            if isinstance(f.dataType, TimestampType)
-        }
-        cols = set(self._series.schema.columns)
+        schema = self._series.schema
+        ts_cols = {c for c, k in schema.columns.items() if k == "timestamp"}
+        cols = set(schema.columns)
         nodes = []
         kept = []
         for f in filters:
@@ -336,13 +307,13 @@ class LakotaBatchReader(DataSourceReader):
                         "cmp",
                         _CMP_OPS[type(f)],
                         ("field", name),
-                        ("lit", _lit(f.value, tz)),
+                        ("lit", _utc(f.value) if tz else f.value),
                     )
                 elif isinstance(f, In):
                     node = (
                         "in",
                         ("field", name),
-                        [_lit(v, tz) for v in f.value],
+                        [_utc(v) if tz else v for v in f.value],
                     )
                 elif isinstance(f, IsNull):
                     node = ("isnull", ("field", name))
@@ -355,15 +326,8 @@ class LakotaBatchReader(DataSourceReader):
         if nodes:
             # validate the whole conjunction against an empty cast table;
             # on any rejection hand EVERYTHING back to Spark
-            from pyspark.sql.pandas.types import to_arrow_schema
-
-            from lakota_spark.series import _arrow_mask_expr
-
             try:
-                probe = to_arrow_schema(
-                    self._series.schema.struct_type()
-                ).empty_table()
-                probe.filter(
+                schema.pyarrow_schema().empty_table().filter(
                     _arrow_mask_expr(("and", [n for n, _ in nodes]))
                 )
             except Exception:  # noqa: BLE001 — pushdown is best-effort

@@ -16,6 +16,7 @@ from __future__ import annotations
 import datetime as dt
 from typing import Any
 
+import numpy as np
 from pyspark.sql import types as T
 
 # lakota alias -> (spark type, simpleString) — `lakota/schema.py:12-20`
@@ -89,10 +90,12 @@ class Schema:
         )
 
     def pyarrow_schema(self):
-        """Arrow schema for driver-local segment writes. Timestamps are
-        ``timestamp(us, UTC)`` — the parquet logical type Spark reads back
-        as (session-UTC) TimestampType, so driver-written and
-        executor-written segment files unify in one scan."""
+        """Arrow schema for driver-local segment writes and the schema
+        every segment scan casts to; equal to Spark's arrow schema of
+        `struct_type`. Timestamps are ``timestamp(us, UTC)`` — the
+        parquet logical type Spark reads back as (session-UTC)
+        TimestampType, so driver-written and executor-written segment
+        files unify in one scan."""
         import pyarrow as pa
 
         pa_types = {
@@ -165,7 +168,10 @@ class Schema:
 
     def coerce_scalar(self, name: str, v: Any) -> Any:
         """Cast one bound value to the column's type
-        (`cast_scalar`, `lakota/schema.py:149-150`)."""
+        (`cast_scalar`, `lakota/schema.py:149-150`). Timestamps become
+        naive-UTC `datetime` objects (the session timezone is UTC),
+        whether given as ISO strings, epoch seconds, `datetime`,
+        `pandas.Timestamp` or `numpy.datetime64`."""
         alias = self.columns[name]
         if alias == "timestamp":
             if isinstance(v, str):
@@ -174,8 +180,17 @@ class Schema:
                 v = dt.datetime.fromtimestamp(v, dt.timezone.utc).replace(
                     tzinfo=None
                 )
-            if isinstance(v, dt.datetime):
-                return v.replace(microsecond=0)  # M8[s] second precision
+            elif isinstance(v, np.datetime64):
+                import pandas as pd
+
+                v = pd.Timestamp(v)
+            if isinstance(v, dt.datetime):  # pandas.Timestamp included
+                if v.tzinfo is not None:
+                    v = v.astimezone(dt.timezone.utc)
+                # M8[s] second precision, as a plain datetime
+                return dt.datetime(
+                    v.year, v.month, v.day, v.hour, v.minute, v.second
+                )
             if isinstance(v, dt.date):
                 return dt.datetime(v.year, v.month, v.day)
         elif alias == "date":

@@ -46,6 +46,15 @@ CLOSED = {
 }
 
 
+def _utc(v):
+    """Segment scans read timestamps as ``us, UTC`` (Spark's arrow
+    schema); a naive datetime is a UTC wall value (the session timezone
+    is UTC), so it is localized to compare against them."""
+    if isinstance(v, dt.datetime) and v.tzinfo is None:
+        return v.replace(tzinfo=dt.timezone.utc)
+    return v
+
+
 def _pa_bound_mask(tbl, idx, bound, closed, is_start):
     """Lexicographic prefix-bound mask over an arrow table — the exact
     twin of `Series._pandas_bound_mask` in pyarrow.compute. Shared by
@@ -56,6 +65,7 @@ def _pa_bound_mask(tbl, idx, bound, closed, is_start):
     eq_all = None
     for c, v in zip(idx[: len(bound)], bound):
         col = tbl.column(c)
+        v = _utc(v)
         cmp = pc.greater(col, v) if is_start else pc.less(col, v)
         eq = pc.equal(col, v)
         if strict is None:
@@ -64,6 +74,57 @@ def _pa_bound_mask(tbl, idx, bound, closed, is_start):
             strict = pc.or_(strict, pc.and_(eq_all, cmp))
             eq_all = pc.and_(eq_all, eq)
     return pc.or_(strict, eq_all) if closed else strict
+
+
+def _index_filter(idx, start_b, start_closed, stop_b, stop_closed):
+    """Coarse filter on the leading index column for a segment scan —
+    the shape `Series._bound_pred` pushes to a native scan. It prunes
+    row groups; the exact prefix bound is applied after the read (a
+    bound on more than one column keeps its leading edge closed)."""
+    import pyarrow.dataset as pads
+
+    lead = pads.field(idx[0])
+    expr = None
+    if start_b is not None:
+        v = _utc(start_b[0])
+        expr = lead >= v if start_closed or len(start_b) > 1 else lead > v
+    if stop_b is not None:
+        v = _utc(stop_b[0])
+        e = lead <= v if stop_closed or len(stop_b) > 1 else lead < v
+        expr = e if expr is None else expr & e
+    return expr
+
+
+def _scan_segment_files(fsys, paths, schema, columns=None, filter_expr=None):
+    """The one reader of segment part files: a single pyarrow.dataset
+    scan over ``paths`` (multithreaded C++, no per-file Python), whose
+    table keeps the given file order — callers pass files in sort
+    order. The explicit dataset ``schema`` is Spark's arrow schema
+    (timestamps ``us, UTC``), so every fragment casts to one type:
+    Spark-written INT96 files (naive ns) and driver-written us/UTC
+    files read alike, and a UTC-literal ``filter_expr`` applies to
+    both — exactly per row, and to row-group statistics for pruning."""
+    import pyarrow.dataset as pads
+
+    return pads.dataset(
+        paths, schema=schema, format="parquet", filesystem=fsys
+    ).to_table(columns=columns, filter=filter_expr)
+
+
+def _pandas_schema(schema):
+    """``schema`` with timestamps as naive ns — the dtype Spark's
+    ``toPandas`` yields under the UTC session timezone, so driver-local
+    frames equal ``frame().toPandas()``."""
+    import pyarrow as pa
+
+    return pa.schema(
+        [
+            pa.field(f.name, pa.timestamp("ns"))
+            if pa.types.is_timestamp(f.type)
+            else f
+            for f in schema
+        ]
+    )
 
 
 def _arrow_mask_expr(plan):
@@ -152,159 +213,55 @@ def _ordered_reader(
     root_uri: str,
     read_struct,
     out_cols: list[str],
-    filters: list[tuple],
     bounds,
     mask_plan=None,
 ):
     """Executor-side reader for `Series._ordered_scan`: each partition
-    reads its (interval-contiguous, name-sorted) part files with pyarrow
-    IN ORDER and yields record batches cast to Spark's expected arrow
-    schema — preserving the global sort without any Exchange.
+    scans its (interval-contiguous, name-sorted) part files in order
+    with `_scan_segment_files` and yields record batches in Spark's
+    arrow schema — preserving the global sort without any Exchange.
 
     ``read_struct`` is the Spark StructType of the read projection
     (out_cols plus any index columns a bound mask needs); ``bounds`` is
     ``(idx_cols, start_b, start_closed, stop_b, stop_closed)`` or None.
-    The exact lexicographic prefix mask mirrors
-    `Series._pandas_bound_mask` in pyarrow.compute, applied AFTER the
-    cast to Spark's arrow types so timestamp comparisons see ONE
-    timezone convention (Spark-written segments read tz=UTC, legacy
-    INT96 reads naive — the cast unifies both; naive datetime bounds
-    are UTC-localized to match, the session timezone being UTC). The
-    coarse leading-index filters keep row-group pruning; a file whose
-    physical type refuses the comparison (naive legacy timestamps)
-    retries unfiltered — the exact mask still clips it."""
-    import datetime as _dt
+    The scan filter is the coarse leading-index filter and the mask;
+    the exact lexicographic prefix mask (`_pa_bound_mask`, the twin of
+    `Series._pandas_bound_mask`) applies after the read."""
+    import posixpath
 
     from pyspark.sql.pandas.types import to_arrow_schema
 
     read_cols = [f.name for f in read_struct.fields]
     target = to_arrow_schema(read_struct)
 
-    def utcize(v):
-        if isinstance(v, _dt.datetime) and v.tzinfo is None:
-            return v.replace(tzinfo=_dt.timezone.utc)
-        return v
-
-    filters = [(c, op, utcize(v)) for c, op, v in filters]
-    if bounds is not None:
-        idx_b, start_b, s_cl, stop_b, e_cl = bounds
-        bounds = (
-            idx_b,
-            tuple(map(utcize, start_b)) if start_b is not None else None,
-            s_cl,
-            tuple(map(utcize, stop_b)) if stop_b is not None else None,
-            e_cl,
-        )
-
-    bound_mask = _pa_bound_mask
-
     def read(batches):
-        import posixpath
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
         from pyarrow import fs as pafs
 
         fsys, root = pafs.FileSystem.from_uri(root_uri)
-        rels = [
-            rel
+        paths = [
+            posixpath.join(root, rel)
             for batch in batches
             for rel in batch.column("rel").to_pylist()
         ]
-        if not rels:
+        if not paths:
             return
-
-        mask_expr = (
-            _arrow_mask_expr(mask_plan) if mask_plan is not None else None
-        )
-
-        def finish(tbl):
-            tbl = tbl.select(read_cols).cast(target)
-            if bounds is not None:
-                idx, start_b, s_closed, stop_b, e_closed = bounds
-                if start_b is not None:
-                    tbl = tbl.filter(
-                        bound_mask(tbl, idx, start_b, s_closed, True)
-                    )
-                if stop_b is not None:
-                    tbl = tbl.filter(
-                        bound_mask(tbl, idx, stop_b, e_closed, False)
-                    )
-            if mask_expr is not None:
-                # exact mask post-cast — authoritative even when the
-                # read-time pushdown below had to retry unfiltered
-                tbl = tbl.filter(mask_expr)
-            return tbl
-
-        if len(rels) > 8:
-            # fragmented partition: ONE C++ dataset scan instead of
-            # per-file pq.read_table calls (GIL-bound python overhead
-            # dominates many small files — the `_read_run_local`
-            # lesson). Scanner.to_table materializes in fragment
-            # (= given-path) order, preserving the partition's sort.
-            import pyarrow.dataset as pads
-
-            expr = None
-            for c, op, v in filters:
-                f = pads.field(c)
-                if op == ">=":
-                    e = f >= v
-                elif op == ">":
-                    e = f > v
-                elif op == "<=":
-                    e = f <= v
-                else:
-                    e = f < v
-                expr = e if expr is None else expr & e
-            if mask_expr is not None:
-                expr = mask_expr if expr is None else expr & mask_expr
-            ds = pads.dataset(
-                [posixpath.join(root, rel) for rel in rels],
-                format="parquet",
-                filesystem=fsys,
-            )
-            try:
-                tbl = ds.to_table(columns=read_cols, filter=expr)
-            except (pa.ArrowInvalid, pa.ArrowNotImplementedError):
-                if expr is None:
-                    raise
-                tbl = ds.to_table(columns=read_cols)
-            tbl = finish(tbl)
-            if tbl.num_rows:
-                yield from tbl.select(out_cols).to_batches()
-            return
-        read_filters = filters or None
-        if mask_expr is not None:
-            # read_table takes ONE filters value — fold the coarse
-            # tuples into the mask expression so both still prune
-            import pyarrow.dataset as pads
-
-            read_filters = mask_expr
-            for c, op, v in filters:
-                f = pads.field(c)
-                e = (
-                    f >= v if op == ">=" else f > v if op == ">"
-                    else f <= v if op == "<=" else f < v
+        expr = _index_filter(*bounds) if bounds is not None else None
+        if mask_plan is not None:
+            mask_expr = _arrow_mask_expr(mask_plan)
+            expr = mask_expr if expr is None else expr & mask_expr
+        tbl = _scan_segment_files(fsys, paths, target, read_cols, expr)
+        if bounds is not None:
+            idx, start_b, s_closed, stop_b, e_closed = bounds
+            if start_b is not None:
+                tbl = tbl.filter(
+                    _pa_bound_mask(tbl, idx, start_b, s_closed, True)
                 )
-                read_filters = read_filters & e
-        for rel in rels:
-            full = posixpath.join(root, rel)
-            try:
-                tbl = pq.read_table(
-                    full,
-                    filesystem=fsys,
-                    columns=read_cols,
-                    filters=read_filters,
+            if stop_b is not None:
+                tbl = tbl.filter(
+                    _pa_bound_mask(tbl, idx, stop_b, e_closed, False)
                 )
-            except (pa.ArrowInvalid, pa.ArrowNotImplementedError):
-                if read_filters is None:
-                    raise
-                tbl = pq.read_table(
-                    full, filesystem=fsys, columns=read_cols
-                )
-            tbl = finish(tbl)
-            if tbl.num_rows:
-                yield from tbl.select(out_cols).to_batches()
+        if tbl.num_rows:
+            yield from tbl.select(out_cols).to_batches()
 
     return read
 
@@ -1431,7 +1388,7 @@ class Series:
             df = df.limit(limit)
         return df.select(*cols)
 
-    def _compile_mask(self, mask: str | None, tz_aware: bool = True):
+    def _compile_mask(self, mask: str | None):
         """Compile ``mask`` to a pyarrow filter plan for the ordered
         scan: `sexpr.to_filter_plan` handles the pushable subset,
         literals compared to timestamp index/value columns coerce to
@@ -1439,9 +1396,7 @@ class Series:
         plan is VALIDATED driver-side against an empty cast table so a
         type the executors would choke on falls back to the classic
         path instead of failing mid-job. Returns (plan, fields) or
-        (None, None) when the mask is absent or not fast-path-safe.
-        ``tz_aware=False`` keeps timestamp literals naive for the
-        driver-local reader, whose cast target is naive ns."""
+        (None, None) when the mask is absent or not fast-path-safe."""
         if mask is None:
             return None, None
         from lakota_spark import sexpr as _sexpr
@@ -1452,13 +1407,8 @@ class Series:
         plan, fields = compiled
         if any(c not in self.schema.columns for c in fields):
             return None, None
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import TimestampType
-
         ts_cols = {
-            f.name
-            for f in self.schema.struct_type().fields
-            if isinstance(f.dataType, TimestampType)
+            c for c, k in self.schema.columns.items() if k == "timestamp"
         }
 
         def coerce(node):
@@ -1466,9 +1416,9 @@ class Series:
             if kind == "cmp":
                 _, op, a, b = node
                 if a[0] == "field" and a[1] in ts_cols and b[0] == "lit":
-                    b = ("lit", self._ts_lit(b[1], tz_aware))
+                    b = ("lit", self._ts_lit(b[1]))
                 elif b[0] == "field" and b[1] in ts_cols and a[0] == "lit":
-                    a = ("lit", self._ts_lit(a[1], tz_aware))
+                    a = ("lit", self._ts_lit(a[1]))
                 return ("cmp", op, a, b)
             if kind in ("and", "or"):
                 return (kind, [coerce(x) for x in node[1]])
@@ -1478,7 +1428,7 @@ class Series:
                 return (
                     "in",
                     node[1],
-                    [self._ts_lit(v, tz_aware) for v in node[2]],
+                    [self._ts_lit(v) for v in node[2]],
                 )
             return node
 
@@ -1497,50 +1447,35 @@ class Series:
                     if k == "float"
                 },
             )
-            if tz_aware:
-                probe = to_arrow_schema(
-                    self.schema.struct_type()
-                ).empty_table()
-            else:
-                import pyarrow as pa
-
-                pa_ns = {"timestamp": pa.timestamp("ns"),
-                         "date": pa.date32(), "int": pa.int64(),
-                         "float": pa.float64(), "str": pa.string()}
-                probe = pa.schema(
-                    [(c, pa_ns[t]) for c, t in self.schema.columns.items()]
-                ).empty_table()
-            probe.filter(_arrow_mask_expr(plan))
+            self.schema.pyarrow_schema().empty_table().filter(
+                _arrow_mask_expr(plan)
+            )
         except Exception:  # noqa: BLE001 — any rejection means classic path
             return None, None
         return plan, fields
 
     @staticmethod
-    def _ts_lit(v, tz_aware: bool = True):
-        """Timestamp literal for an arrow-side mask: parse strings /
-        naive datetimes; UTC-localized for the executor reader (its
-        cast schema reads timestamps as tz=UTC; session timezone is
-        UTC), naive for the driver-local ns reader."""
+    def _ts_lit(v):
+        """Timestamp literal for an arrow-side mask: strings and naive
+        datetimes parse to UTC datetimes, the type segment scans read."""
         import pandas as pd
 
-        ts = pd.Timestamp(v)
-        out = ts.to_pydatetime()
-        if tz_aware and out.tzinfo is None:
-            out = out.replace(tzinfo=dt.timezone.utc)
-        return out
+        return _utc(pd.Timestamp(v).to_pydatetime())
 
     def df(self, *args, **kwargs):
         """pandas sink (`lakota/series.py:340-358`).
 
-        When the backend exposes a pyarrow filesystem and every pruned
-        segment is clean (never clipped by an overlay) and the
-        collection is not KV, the frame is read DRIVER-SIDE with
-        pyarrow — parallel file reads, zero Spark jobs, and the global
-        sort comes free (clean segments are pairwise disjoint and
-        internally sorted, so interval-ordered concatenation IS the
-        sorted frame). Everything else falls back to
-        ``frame(...).toPandas()``; both paths return identical frames
-        (covered by the differential tests that call ``df()``).
+        Reads run DRIVER-SIDE whenever the backend exposes a pyarrow
+        filesystem: one `_scan_segment_files` scan of the pruned
+        segments — zero Spark jobs, with ``start``/``stop`` bounds and
+        pushable masks applied in the scan and the global sort free
+        (clean segments are pairwise disjoint and internally sorted, so
+        interval-ordered files ARE the sorted frame). Four shapes fall
+        back to ``frame(...).toPandas()``: overlapping KV series (last-
+        writer-wins dedup), clipped segments (overlay-narrowed bounds),
+        masks outside the pushable subset, and backends that are not
+        pyarrow-readable. Both paths return identical frames (covered
+        by the differential tests that call ``df()``).
 
         The fallback catches ONLY environment-shaped failures (IO /
         Arrow / OS errors — e.g. a backend that advertised
@@ -1578,10 +1513,7 @@ class Series:
             return None
         mask_plan = mask_fields = None
         if mask is not None:
-            # naive-ns literals: the local cast target is timestamp[ns]
-            mask_plan, mask_fields = self._compile_mask(
-                mask, tz_aware=False
-            )
+            mask_plan, mask_fields = self._compile_mask(mask)
             if mask_plan is None:
                 return None  # non-pushable mask -> the Spark path
         segs = self.segments(start, stop, before, closed)
@@ -1594,7 +1526,7 @@ class Series:
                 # the Spark path implements it. Disjoint KV (round 13)
                 # reads driver-local like any other series, with the
                 # commit-ordered snapshot list re-sorted to interval
-                # order (concat order below IS the sort order).
+                # order (file order below IS the sort order).
                 return None
             live = sorted(live, key=lambda s: tuple(s.start))
         if mask_plan is not None:
@@ -1603,25 +1535,7 @@ class Series:
             live = zonemap.prune(live, mask_plan)
         if any(s.meta.get("clip") for s in live):
             return None  # narrowed bounds need the per-segment filter
-        import pandas as pd
-
         cols = select or list(self.schema.columns)
-        if not live:
-            import pyarrow as pa
-
-            pa_ns = {
-                "timestamp": pa.timestamp("ns"),
-                "date": pa.date32(),
-                "int": pa.int64(),
-                "float": pa.float64(),
-                "str": pa.string(),
-            }
-            return pa.schema(
-                [(c, pa_ns[self.schema.columns[c]]) for c in cols]
-            ).empty_table().to_pandas()
-        import pyarrow.parquet as pq
-        from concurrent.futures import ThreadPoolExecutor
-
         idx = self.schema.idx
         read_cols = list(
             dict.fromkeys([*cols, *idx, *(mask_fields or ())])
@@ -1629,65 +1543,25 @@ class Series:
         start_b = self.schema.coerce_bound(start)
         stop_b = self.schema.coerce_bound(stop)
         start_closed, stop_closed = CLOSED[closed]
-        # coarse row-group pruning on the leading index column (the same
-        # shape `_bound_pred` pushes to the Spark scan)
-        filters = []
-        if start_b is not None:
-            op = ">=" if (start_closed or len(start_b) > 1) else ">"
-            filters.append((idx[0], op, start_b[0]))
-        if stop_b is not None:
-            op = "<=" if (stop_closed or len(stop_b) > 1) else "<"
-            filters.append((idx[0], op, stop_b[0]))
-        seg_prefix = self.collection.seg_prefix
-        files = []
-        for s in live:  # interval order == global sort order
-            d = f"{seg_prefix}/{s.path}"
-            files.extend(
-                f"{d}/{nm}" for nm in fs.ls(d) if nm.endswith(".parquet")
-            )
-
-        def read_one(rel: str):
-            return pq.read_table(
-                fs.full(rel),
-                filesystem=fs.fs,
-                columns=read_cols,
-                filters=filters or None,
-            )
-
-        if len(files) == 1:
-            tables = [read_one(files[0])]
-        else:
-            with ThreadPoolExecutor(max_workers=min(16, len(files))) as ex:
-                tables = list(ex.map(read_one, files))
+        expr = _index_filter(idx, start_b, start_closed, stop_b, stop_closed)
+        if mask_plan is not None:
+            mask_expr = _arrow_mask_expr(mask_plan)
+            expr = mask_expr if expr is None else expr & mask_expr
+        tbl = _scan_segment_files(
+            fs.fs,
+            self._part_files(live),
+            self.schema.pyarrow_schema(),
+            read_cols,
+            expr,
+        )
         # Stay in arrow until ONE to_pandas at the end: the naive-pandas
         # shape (per-file to_pandas + pd.concat + dtype normalize +
         # column select) costs four full-frame copies — measured 4 s on
-        # 5.26M rows where the arrow-level concat/cast/select runs in
-        # 0.09 s. The cast also unifies mixed physical timestamps
-        # (Spark INT96 → ns-naive, driver-written us/UTC → ns-naive
-        # wall values — the session timezone is UTC) to the exact dtype
-        # Spark's toPandas yields.
-        import pyarrow as pa
-
-        pa_ns = {
-            "timestamp": pa.timestamp("ns"),
-            "date": pa.date32(),
-            "int": pa.int64(),
-            "float": pa.float64(),
-            "str": pa.string(),
-        }
-        target = pa.schema(
-            [(c, pa_ns[self.schema.columns[c]]) for c in read_cols]
+        # 5.26M rows where the arrow-level cast runs in 0.09 s. The cast
+        # yields the exact dtypes Spark's toPandas does.
+        pdf = tbl.cast(_pandas_schema(tbl.schema)).to_pandas(
+            self_destruct=True
         )
-        tbl = (
-            pa.concat_tables(tables, promote_options="permissive")
-            .select(read_cols)
-            .cast(target)
-        )
-        if mask_plan is not None:
-            # arrow-side exact mask before the single to_pandas
-            tbl = tbl.filter(_arrow_mask_expr(mask_plan))
-        pdf = tbl.to_pandas(self_destruct=True)
         if start_b is not None:
             pdf = pdf[
                 self._pandas_bound_mask(pdf, start_b, start_closed, True)
@@ -1706,23 +1580,36 @@ class Series:
             pdf = pdf[cols]
         return pdf
 
+    def _part_files(self, segs: list[Segment]) -> list[str]:
+        """Full paths of the segments' part files: segment order, then
+        name order within a segment — the sort order of clean
+        segments."""
+        fs = self.collection.fs
+        dirs = [f"{self.collection.seg_prefix}/{s.path}" for s in segs]
+        return [
+            fs.full(d, nm)
+            for d in dirs
+            for nm in fs.ls(d)
+            if nm.endswith(".parquet")
+        ]
+
     def _read_run_local(self, segs: list[Segment]):
         """Driver-local pandas frame of a CLEAN segment run — the defrag
         fast path: a fragmented run is thousands of tiny files whose
         total bytes are driver-sized, so rewriting it through a Spark
         job pays pure scheduler/discovery overhead (measured 37.6 s for
         a 10k-segment defrag that the pyarrow path does in ~2 s). Same
-        concat/cast pipeline as `_df_local`, limited to the given
-        segments, in run order (clean segments are disjoint and sorted,
-        so run-ordered concat IS the sorted frame). Returns None when
-        the run disqualifies (non-arrow FS, OVERLAPPING-KV, clipped
-        pieces — those need the resolving read / per-segment bounds
-        re-filter only the Spark path implements). A pairwise-disjoint
-        KV run qualifies (round 13): last-writer-wins is a per-row
-        no-op, and KV snapshots keep the label block start-sorted
-        (`Snapshot.overlay`'s bisect insert), so run-ordered concat is
-        the sorted frame here too — fragmented KV registries defrag at
-        pyarrow speed instead of one Spark job per run."""
+        scan and cast as `_df_local`, limited to the given segments, in
+        run order (clean segments are disjoint and sorted, so run order
+        IS the sorted frame). Returns None when the run disqualifies
+        (non-arrow FS, OVERLAPPING-KV, clipped pieces — those need the
+        resolving read / per-segment bounds re-filter only the Spark
+        path implements). A pairwise-disjoint KV run qualifies (round
+        13): last-writer-wins is a per-row no-op, and KV snapshots keep
+        the label block start-sorted (`Snapshot.overlay`'s bisect
+        insert), so run order is the sorted frame here too — fragmented
+        KV registries defrag at pyarrow speed instead of one Spark job
+        per run."""
         fs = self.collection.fs
         if not getattr(fs, "arrow_readable", False):
             return None
@@ -1735,72 +1622,24 @@ class Series:
                 return None
         if any(s.meta.get("clip") or not s.path for s in segs):
             return None
-        from concurrent.futures import ThreadPoolExecutor
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        cols = list(self.schema.columns)
-        seg_prefix = self.collection.seg_prefix
-        files = []
-        for s in segs:
-            d = f"{seg_prefix}/{s.path}"
-            files.extend(
-                f"{d}/{nm}" for nm in fs.ls(d) if nm.endswith(".parquet")
-            )
+        files = self._part_files(segs)
         if not files:
             return None
-        if len(files) > 64:
-            # one C++-parallel dataset scan: per-file pq.read_table calls
-            # are GIL-bound python overhead that dominates thousands of
-            # tiny files (profiled 2.8 s of lock churn at 4k files).
-            # Scanner.to_table materializes in fragment (= given-path)
-            # order, preserving the run's sort order.
-            import pyarrow.dataset as pads
-
-            tables = [
-                pads.dataset(
-                    [fs.full(f) for f in files],
-                    format="parquet",
-                    filesystem=fs.fs,
-                ).to_table(columns=cols)
-            ]
-        else:
-
-            def read_one(rel: str):
-                return pq.read_table(
-                    fs.full(rel), filesystem=fs.fs, columns=cols
-                )
-
-            with ThreadPoolExecutor(max_workers=min(16, len(files))) as ex:
-                tables = list(ex.map(read_one, files))
-        pa_ns = {
-            "timestamp": pa.timestamp("ns"),
-            "date": pa.date32(),
-            "int": pa.int64(),
-            "float": pa.float64(),
-            "str": pa.string(),
-        }
-        target = pa.schema(
-            [(c, pa_ns[self.schema.columns[c]]) for c in cols]
-        )
-        tbl = (
-            pa.concat_tables(tables, promote_options="permissive")
-            .select(cols)
-            .cast(target)
-        )
+        tbl = _scan_segment_files(fs.fs, files, self.schema.pyarrow_schema())
         # the pandas hop below folds real NaN into null
         # (`Table.from_pandas` on the rewrite cannot tell them apart) —
         # a defrag must not corrupt Spark-written NaN data, so such
         # runs take the Spark rewrite path instead
         import pyarrow.compute as pc
 
-        for c in cols:
-            if self.schema.columns[c] == "float" and pc.any(
+        for c, kind in self.schema.columns.items():
+            if kind == "float" and pc.any(
                 pc.is_nan(tbl.column(c))
             ).as_py():
                 return None
-        return tbl.to_pandas(self_destruct=True)
+        return tbl.cast(_pandas_schema(tbl.schema)).to_pandas(
+            self_destruct=True
+        )
 
     def _pandas_bound_mask(self, pdf, bound, closed: bool, is_start: bool):
         """Pandas twin of `_bound_pred`: lexicographic prefix compare
@@ -1977,8 +1816,8 @@ class Series:
         and partition order == global sort order — so collect / limit /
         offset / toPandas see sorted rows with ZERO Exchange or Sort
         nodes in the plan (`tests/test_plans.py` pins this). Pushdown is
-        preserved by hand: coarse leading-index filters go to
-        ``pq.read_table(filters=)`` (row-group pruning), the exact
+        preserved by hand: the coarse leading-index filter and the mask
+        go to the pyarrow scan (row-group pruning), the exact
         lexicographic prefix bound applies arrow-side, and only
         ``cols ∪ idx`` columns are read.
 
@@ -2052,15 +1891,6 @@ class Series:
                 [*cols, *(idx if need_mask else []), *mask_cols]
             )
         )
-        # coarse row-group pruning on the leading index column — the
-        # same shape `_bound_pred` pushes to a native scan
-        filters = []
-        if start_b is not None:
-            op = ">=" if (start_closed or len(start_b) > 1) else ">"
-            filters.append((idx[0], op, start_b[0]))
-        if stop_b is not None:
-            op = "<=" if (stop_closed or len(stop_b) > 1) else "<"
-            filters.append((idx[0], op, stop_b[0]))
         from pyspark.sql.types import StructType
 
         fields = {f.name: f for f in self.schema.struct_type().fields}
@@ -2070,7 +1900,6 @@ class Series:
             base.uri,
             read_struct,
             cols,
-            filters,
             (idx, start_b, start_closed, stop_b, stop_closed)
             if need_mask
             else None,

@@ -932,3 +932,168 @@ def test_local_write_paths_byte_identical(repo):
     ck = repo.create_collection(Schema(k="int*", v="float"), "fast_c")
     with pytest.raises(ValueError, match="not sorted"):
         ck.series("x").write(bad, validate_sorted=True)
+
+
+def _file_series(spark, tmp_path, name, **schema):
+    """A series on a pyarrow-readable (file) backend — the backend
+    whose ``df()`` reads driver-local."""
+    from lakota_spark.repo import Repo
+
+    file_repo = Repo(str(tmp_path / name), spark)
+    return file_repo, file_repo.create_collection(Schema(**schema), name).series("s")
+
+
+def test_df_bounded_timestamp_reads_stay_local(spark, tmp_path):
+    # bounded df() on a timestamp index: the UTC-typed scan filter
+    # applies, the read stays driver-local (no fallback) and equals
+    # frame().toPandas() for every closed value and for prefix bounds
+    import datetime as dt
+
+    from lakota_spark.series import Series
+
+    base = dt.datetime(2024, 3, 1)
+    _, s = _file_series(spark, tmp_path, "bt", ts="timestamp*", value="float")
+    for k in range(3):  # three driver-written segments
+        s.write({
+            "ts": [base + dt.timedelta(hours=12 * k + i) for i in range(12)],
+            "value": [float(12 * k + i) for i in range(12)],
+        })
+    _, s2 = _file_series(
+        spark, tmp_path, "bt2", ts="timestamp*", version="int*", value="float"
+    )
+    for k in range(3):
+        s2.write({
+            "ts": [base + dt.timedelta(hours=4 * k + i // 2) for i in range(8)],
+            "version": [i % 2 for i in range(8)],
+            "value": [float(8 * k + i) for i in range(8)],
+        })
+    cases = [
+        (s, dict(start="2024-03-01T05:00:00", stop=base + dt.timedelta(hours=30),
+                 closed=closed))
+        for closed in ("b", "l", "r", "n")
+    ] + [
+        (s, dict(start="2024-03-01T12:00:00")),
+        (s, dict(stop=base + dt.timedelta(hours=7), closed="l")),
+        (s2, dict(start=(base + dt.timedelta(hours=2),),
+                  stop=(base + dt.timedelta(hours=9), 0))),
+        (s2, dict(start=(base + dt.timedelta(hours=2), 1),
+                  stop=(base + dt.timedelta(hours=9),), closed="n")),
+    ]
+    del Series.df_fallbacks[:]
+    for srs, kw in cases:
+        assert srs._df_local(**kw) is not None, kw
+        a = srs.df(**kw)
+        b = srs.frame(**kw).toPandas()
+        assert len(a) and a.equals(b), (kw, a, b)
+    assert Series.df_fallbacks == []
+
+
+def test_df_numpy_and_pandas_timestamp_bounds(spark, tmp_path):
+    # np.datetime64 and pandas.Timestamp bounds (tz-aware included)
+    # coerce to naive-UTC datetimes: the read stays local and matches
+    # the Spark path
+    import datetime as dt
+
+    import numpy as np
+    import pandas as pd
+
+    from lakota_spark.series import Series
+
+    base = dt.datetime(2024, 3, 1)
+    _, s = _file_series(spark, tmp_path, "np", ts="timestamp*", value="float")
+    s.write({
+        "ts": [base + dt.timedelta(hours=i) for i in range(24)],
+        "value": [float(i) for i in range(24)],
+    })
+    assert s.schema.coerce_scalar(
+        "ts", pd.Timestamp("2024-03-01T10:00:00+02:00")
+    ) == dt.datetime(2024, 3, 1, 8)
+    assert type(s.schema.coerce_scalar("ts", pd.Timestamp(base))) is dt.datetime
+    del Series.df_fallbacks[:]
+    for kw in (
+        dict(start=np.datetime64("2024-03-01T05:00:00")),
+        dict(start=np.datetime64("2024-03-01T05:00:00", "ns"),
+             stop=np.datetime64("2024-03-01T09"), closed="r"),
+        dict(start=pd.Timestamp("2024-03-01T05:00:00"),
+             stop=pd.Timestamp("2024-03-01T12:00:00+02:00"), closed="l"),
+    ):
+        assert s._df_local(**kw) is not None, kw
+        a = s.df(**kw)
+        b = s.frame(**kw).toPandas()
+        assert len(a) and a.equals(b), (kw, a, b)
+    assert Series.df_fallbacks == []
+
+
+def test_mixed_writer_many_segments_all_readers_agree(spark, tmp_path):
+    # >64 disjoint segments, mixing executor writes (Spark's parquet
+    # writer, INT96 timestamps) with driver-local appends (us, UTC):
+    # every read path casts to one schema and keeps file order, so
+    # df(), df(before=), sorted frame(), the data source with a pushed
+    # timestamp filter, and a defrag all yield the same rows in order
+    import datetime as dt
+    import time
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from lakota_spark.datasource import register
+    from lakota_spark.series import Series
+
+    register(spark)
+    repo, s = _file_series(
+        spark, tmp_path, "mix", ts="timestamp*", value="float", qty="int"
+    )
+    assert to_arrow_schema(s.schema.struct_type()) == s.schema.pyarrow_schema()
+    base = dt.datetime(2024, 1, 1)
+
+    def chunk(k):
+        ts = [base + dt.timedelta(minutes=10 * k + i) for i in range(5)]
+        return {"ts": ts, "value": [k + i / 10 for i in range(5)],
+                "qty": [k * 10 + i for i in range(5)]}
+
+    mid = None
+    for k in range(70):
+        data = chunk(k)
+        if k in (3, 37):  # executor path
+            s.write(spark.createDataFrame(
+                list(zip(data["ts"], data["value"], data["qty"])),
+                "ts timestamp, value double, qty long",
+            ))
+        else:
+            s.write(data)
+        if k == 40:
+            time.sleep(0.01)
+            mid = time.time()
+            time.sleep(0.01)
+    segs = s.segments()
+    assert len(segs) == 70 and not any(x.meta.get("clip") for x in segs)
+    ts_types = {
+        str(pq.read_schema(f).field("ts").type) for f in s._part_files(segs)
+    }
+    assert ts_types == {"timestamp[ns]", "timestamp[us, tz=UTC]"}
+
+    del Series.df_fallbacks[:]
+    want = s.frame().toPandas()
+    assert len(want) == 350 and want["ts"].is_monotonic_increasing
+    assert s._df_local() is not None
+    assert s.df().equals(want)
+    assert s.df(before=mid).equals(want.iloc[:41 * 5])
+    cut = base + dt.timedelta(minutes=10 * 20 + 2)
+    ds = (
+        spark.read.format("lakota")
+        .option("path", repo.root)
+        .option("table", "mix/s")
+        .load()
+        .where(F.col("ts") >= F.lit(cut))
+        .toPandas()
+        .sort_values("ts", ignore_index=True)
+    )
+    tail = want[want["ts"] >= cut].reset_index(drop=True)
+    assert len(tail) == 50 * 5 - 2 and ds.equals(tail)
+    assert s.df(start=cut).equals(tail)
+    assert Series.df_fallbacks == []
+    s.collection.defrag()
+    assert len(s.segments()) < 70
+    assert s.df().equals(want)
+    assert s.frame().toPandas().equals(want)
